@@ -71,6 +71,31 @@ def _path_signature(path: str) -> tuple:
         return ("missing",)
 
 
+def base_relations(spark: SparkSession, sf_dir: str, name: str) -> tuple[DataFrame, DataFrame]:
+    """(raw, table) relations of base table ``name`` under ``sf_dir``:
+    the parquet relation as read, and the one ``Catalog.table`` serves
+    (``events`` gets its ts normalized). Memoized per session; the memo
+    entry is only valid while the underlying file is byte-identical to
+    the one the relation captured, because the relation pins the parquet
+    schema (and possibly file listing) at creation. Keying on
+    (mtime_ns, size) means a caller that rewrites a table in place — the
+    fuzz gates do this between hypothesis examples — always gets a fresh
+    relation instead of one with a stale footer snapshot."""
+    per_session = _RELATIONS.setdefault(spark, {})
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    sig = _path_signature(path)
+    hit = per_session.get(path)
+    if hit is None or hit[0] != sig:
+        raw = spark.read.parquet(path)
+        table = raw
+        if name == "events":
+            from .streaming.events import normalize_ts
+
+            table = normalize_ts(raw)
+        hit = per_session[path] = (sig, raw, table)
+    return hit[1], hit[2]
+
+
 class Catalog:
     """Lazy parquet table catalog rooted at a scale-factor directory."""
 
@@ -90,32 +115,10 @@ class Catalog:
         self.sf_dir = sf_dir
         self._tables: dict[str, DataFrame] = dict(overrides or {})
 
-    def path(self, name: str) -> str:
-        return os.path.join(self.sf_dir, f"{name}.parquet")
-
     def table(self, name: str) -> DataFrame:
         """DataFrame for a base table (lazy; no job until an action)."""
         if name not in self._tables:
-            per_session = _RELATIONS.setdefault(self.spark, {})
-            path = self.path(name)
-            # The memo entry is only valid while the underlying file is
-            # byte-identical to the one the relation captured: the
-            # relation pins the parquet schema (and possibly file
-            # listing) at creation.  Key on (mtime_ns, size) so a
-            # caller that rewrites a table in place — the fuzz gates do
-            # this between hypothesis examples — always gets a fresh
-            # relation instead of one with a stale footer snapshot.
-            sig = _path_signature(path)
-            hit = per_session.get(path)
-            df = hit[1] if hit is not None and hit[0] == sig else None
-            if df is None:
-                df = self.spark.read.parquet(path)
-                if name == "events":
-                    from .streaming.events import normalize_ts
-
-                    df = normalize_ts(df)
-                per_session[path] = (sig, df)
-            self._tables[name] = df
+            self._tables[name] = base_relations(self.spark, self.sf_dir, name)[1]
         return self._tables[name]
 
     def __getattr__(self, name: str) -> DataFrame:

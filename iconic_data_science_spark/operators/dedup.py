@@ -370,6 +370,12 @@ def ngram_jaccard_pairs(
     string-shingle ``shingle_table`` is kept for callers needing
     human-readable shingles; the fixture test proves both key types
     produce the same pair set.
+
+    Eager at construction: the capped path (any ``max_shingle_freq``
+    other than None) runs Spark jobs while this function builds the
+    frame, not at the caller's action — ``localCheckpoint`` of the
+    tokenized arrays, then the ``limit(513).collect()`` probe that picks
+    the hot-set tier. The uncapped path stays lazy.
     """
     base = _token_hash_base(documents, "doc_id", "text").filter(F.col("_nt") >= n)
     arr = base.select(

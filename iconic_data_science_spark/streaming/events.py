@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import base_relations
 from ..functions import dec_sum
 
 EVENT_SCHEMA_RAW = T.StructType(
@@ -65,12 +66,10 @@ def normalize_ts(df: DataFrame) -> DataFrame:
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (for tests/demos; a
     production deployment points the same pipeline at Kafka). Streaming
-    sources need an explicit schema — take it from the parquet footer via
-    a (lazy, metadata-only) batch read so the stream adapts to the file's
-    actual ts encoding."""
-    import os
-
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    sources need an explicit schema — take it from the catalog's memoized
+    raw batch relation, so the stream adapts to the file's actual ts
+    encoding without a schema-inference job on every build."""
+    schema = base_relations(spark, sf_dir, "events")[0].schema
     raw = (
         spark.readStream.format("parquet")
         .schema(schema)

@@ -90,6 +90,27 @@ def test_driver_contract_integrity():
         assert needle in qs[name].__doc__, f"{name} lacks twin pointer"
 
 
+def test_driver_contract_pinned():
+    """The driver checks only the first 50 ``queries()`` entries, so the
+    registry order is part of the contract, as is every oracle string.
+    Both are pinned by hash: a refactor of the entry file must leave
+    them byte-identical, and a deliberate reorder (a regenerated
+    ``_ORDER`` from tools/build_front.py) or oracle edit updates the pin
+    in the same change."""
+    import hashlib
+    import json
+
+    import __spark_entry__ as entrymod
+
+    names = list(entrymod.queries())
+    oracles = entrymod.oracle_sql()
+    assert (len(names), len(oracles)) == (254, 252)
+    order_sha = hashlib.sha256("\n".join(names).encode()).hexdigest()
+    sql_sha = hashlib.sha256(json.dumps(sorted(oracles.items())).encode()).hexdigest()
+    assert order_sha == "fd62201c77a3c00d2de817c9cf60ac9ee26d0b64b599003e53862b35f8d73bc9"
+    assert sql_sha == "79ce4aabe2c665222d92aff3eb3addd7a69074d9971adb75825b74140cc876e9"
+
+
 # Queries whose DuckDB oracle REPLAYS the engine's own arithmetic
 # (unrolled-CTE training/iteration chains, fixed-round recurrences, or
 # literal-for-literal formula replays). For these, the hash gate proves
@@ -244,11 +265,15 @@ def test_build_front_tiering_rules():
     """tools/build_front.py is the reproducible front generator
     (r7 verdict item 6): never-attempted first (oracled before
     rows-only), then oldest-evidence-first; --boost promotes within a
-    tier without crossing tiers; stable within ties."""
+    tier without crossing tiers; stable within ties; the names after
+    the window keep their current order."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
-    from build_front import build_front
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    )
+    from build_front import build_front, build_order
 
     names = ["q_old4", "q_new_rows", "q_old3", "q_new_orc", "q_old4b", "q_fresh7"]
     oracled = {"q_old4", "q_old3", "q_new_orc", "q_old4b", "q_fresh7"}
@@ -263,6 +288,9 @@ def test_build_front_tiering_rules():
         n for n, _ in build_front(names, oracled, latest, attempted, 10, ["q_old4b"])
     ]
     assert boosted == ["q_new_orc", "q_new_rows", "q_old3", "q_old4b", "q_old4", "q_fresh7"]
+    # the complete order: a 2-slot front, then the tail in current order
+    order = build_order(names, oracled, latest, attempted, 2, [])
+    assert order == ["q_new_orc", "q_new_rows", "q_old4", "q_old3", "q_old4b", "q_fresh7"]
 
 
 def test_driver_evidence_freshness():

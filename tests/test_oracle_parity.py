@@ -2,11 +2,11 @@
 t2 gate, replicated strictly). Runs at sf0.001 by default for speed;
 set SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 for the full-size check.
 
-Long gate: skipped unless SPARK_GRAFT_FULL_GATES=1 (VERDICT r10 item 2 —
-the 254-query sweep pushed the default ``pytest tests/`` run past the
-verify window; the builder's round-close sets the flag, and the
-full-catalog evidence also lands in the committed parity_timing_r*.json
-/ parity_hostile_r*.json sweeps).
+The default run checks the ten benchmark queries (SMOKE) as a parity
+smoke. The full 254-query sweep runs only with SPARK_GRAFT_FULL_GATES=1,
+because it pushes a default ``pytest tests/`` run past its time budget;
+the full-catalog evidence also lands in the committed
+parity_timing_r*.json / parity_hostile_r*.json sweeps.
 """
 
 from __future__ import annotations
@@ -15,16 +15,23 @@ import os
 
 import pytest
 
-if not os.environ.get("SPARK_GRAFT_FULL_GATES"):
-    pytest.skip(
-        "long gate suite; set SPARK_GRAFT_FULL_GATES=1 to run",
-        allow_module_level=True,
-    )
-
 import __spark_entry__ as entrymod
 from .oracle_utils import run_parity
 
-NAMES = sorted(entrymod.queries().keys())
+SMOKE = [
+    "g1_coauthor_edges",
+    "g3_personal_net",
+    "g5_hierarchy_roots",
+    "g_triangle_count",
+    "web_pagerank",
+    "q1_pricing_summary",
+    "q9_product_profit",
+    "q21_waiting_suppliers",
+    "asof_signup_value",
+    "f7_json_extract",
+]
+
+NAMES = sorted(entrymod.queries()) if os.environ.get("SPARK_GRAFT_FULL_GATES") else SMOKE
 
 
 @pytest.mark.parametrize("name", NAMES)
